@@ -10,9 +10,12 @@ Reference usages (SURVEY.md §2.6 rows 26-32):
 
 from __future__ import annotations
 
+import datetime as dt
+import re
+import zoneinfo
 from typing import Any, Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -26,6 +29,40 @@ def months_ago(n: int, anchor: Column | None = None) -> Column:
     reference ``v2/dag.py:132-135``)."""
     anchor = anchor if anchor is not None else F.current_timestamp()
     return F.date_trunc("month", F.add_months(anchor, -n))
+
+
+def months_ago_at(n: int, anchor: dt.date, zone: dt.tzinfo) -> dt.datetime:
+    """The value ``months_ago(n, F.lit(anchor))`` takes in a session whose
+    time zone is ``zone`` (see ``session_zone``), computed on the driver
+    with no Spark job: the first of the month ``n`` months before the
+    anchor's session-local date, at session-local midnight. A naive
+    ``anchor`` is local time of this process, as ``F.lit`` reads it. The
+    result is time-zone aware, so ``F.lit`` of it is the same instant."""
+    day = anchor.astimezone(zone) if isinstance(anchor, dt.datetime) else anchor
+    year, month0 = divmod(day.year * 12 + day.month - 1 - n, 12)
+    return dt.datetime(year, month0 + 1, 1, tzinfo=zone)
+
+
+_OFFSET_ZONE = re.compile(r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?")
+
+
+def session_zone(spark: SparkSession) -> dt.tzinfo | None:
+    """The session time zone (``spark.sql.session.timeZone``) as a Python
+    tzinfo: a region ID through ``zoneinfo``, or a fixed offset such as
+    ``+05:30`` or ``UTC-8``. None for a form neither covers (Java's
+    deprecated three-letter IDs), so callers fall back to Spark-side
+    evaluation."""
+    name = spark.conf.get("spark.sql.session.timeZone").strip()
+    if name == "Z":
+        return dt.timezone.utc
+    m = _OFFSET_ZONE.fullmatch(name)
+    if m:
+        sign = -1 if m[1] == "-" else 1
+        return dt.timezone(sign * dt.timedelta(hours=int(m[2]), minutes=int(m[3] or 0)))
+    try:
+        return zoneinfo.ZoneInfo(name)
+    except (zoneinfo.ZoneInfoNotFoundError, ValueError):
+        return None
 
 
 def mod_shard(col: Column | str, num_shards: int) -> Column:

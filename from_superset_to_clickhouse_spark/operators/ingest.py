@@ -1,23 +1,28 @@
 """Incremental ingest — the reference's flagship path, Spark-first.
 
-Entry point A in SURVEY.md §3.1 (v2 daily load, ``v2/dag.py:98-122``):
-watermark probe → pushed-down incremental filter on the source →
-projection with NULL→DEFAULT coercion + constant lineage column →
-append into a dedup store. Entry point B (§3.2, v1 shard load +
-partition swap) is the same staging DataFrame published with
+Entry point A in SURVEY.md §3.1 (v2 daily load, ``v2/dag.py:98-122``)
+is a watermark probe, a pushed-down incremental filter on the source, a
+projection with NULL→DEFAULT coercion and a constant lineage column,
+then an append into a dedup store. Entry point B (§3.2, v1 shard load
+with a partition swap) publishes the same staging DataFrame with
 ``overwrite_partitions`` instead of ``append``.
 
-Scale: the watermark probe is a single-column scan with partial agg; the
-incremental filter is planned before the read so it reaches the Parquet
-row-group stats / remote WHERE clause; the projection is pure Catalyst
-expressions (whole-stage codegen, no Python).
+Scale: the watermark probe is a single-column scan with partial
+aggregation, and it is the one read of the target a load makes; the
+target's read schema comes from its meta, so planning opens no file. The
+incremental filter is planned before the read, so it reaches the Parquet
+row-group stats or the remote WHERE clause. The projection is pure
+Catalyst expressions (whole-stage codegen, no Python). The optional row
+count and the batch's MAX(watermark) ride the write as one
+``Observation``: the increment is scanned once.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from from_superset_to_clickhouse_spark import watermark as wm
@@ -50,6 +55,22 @@ def build_increment(
     return schema.coerce(df)
 
 
+@dataclass(frozen=True)
+class LoadReport:
+    """What one ``load_increment`` did.
+
+    ``rows``: rows loaded, as ``ingest`` returns them. ``watermark``: the
+    target's watermark the increment was filtered against (the bootstrap
+    value on an empty target). ``batch_max``: MAX of the watermark field
+    over the loaded rows, or None when the load counted nothing or
+    loaded nothing. The target's watermark after the load is the larger
+    of the two."""
+
+    rows: int | None
+    watermark: Any
+    batch_max: Any = None
+
+
 def ingest(
     store: TableStore,
     source_df: DataFrame,
@@ -71,17 +92,38 @@ def ingest(
     publish="swap"    → v1 semantics: month-floored >= watermark, stage,
                         then atomically replace the affected partitions.
 
-    Row counting is FREE: with ``count_rows=True`` an ``Observation``
-    rides the write action, so the increment is scanned exactly once
-    either way (an up-front ``count()`` would scan the source increment
-    twice — 2× source I/O per load at scale, VERDICT.md r1 item 8).
-    Without a count, the empty-increment check uses ``isEmpty()``
-    (stops at the first found row) to skip the write entirely; with the
-    observation the write itself is the emptiness probe (an empty
-    append/dynamic-overwrite is a no-op on the table data).
+    ``load_increment`` runs the load and reports the watermarks too.
     """
-    from pyspark.sql import Observation
+    return load_increment(
+        store, source_df, schema, watermark_field, source_tag,
+        strict=strict, publish=publish, column_map=column_map,
+        count_rows=count_rows,
+    ).rows
 
+
+def load_increment(
+    store: TableStore,
+    source_df: DataFrame,
+    schema: Schema,
+    watermark_field: str,
+    source_tag: str,
+    strict: bool = True,
+    publish: str = "append",
+    column_map: dict[str, str] | None = None,
+    count_rows: bool = False,
+) -> LoadReport:
+    """``ingest`` with its ``LoadReport``: the same load, also returning
+    the watermark it filtered against and the batch's MAX(watermark).
+
+    Row counting is free: with ``count_rows=True`` an ``Observation``
+    rides the write action and carries the row count and the batch's
+    MAX(watermark), so the increment is scanned exactly once either way
+    (an up-front ``count()`` would scan the source increment twice).
+    Without a count, the empty-increment check uses ``isEmpty()`` (stops
+    at the first found row) to skip the write entirely; with the
+    observation the write itself is the emptiness probe (an empty
+    append or dynamic overwrite is a no-op on the table data).
+    """
     store.create(schema, if_not_exists=True)
     target = store.read(schema.name)
     if publish == "swap":
@@ -97,17 +139,22 @@ def ingest(
     inc_plain = inc
     if count_rows:
         obs = Observation()
-        inc = inc_plain.observe(obs, F.count(F.lit(1)).alias("n"))
+        inc = inc_plain.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.col(watermark_field)).alias("hi"),
+        )
     elif inc_plain.isEmpty():
-        return 0
+        return LoadReport(0, value)
     if publish == "swap":
         store.overwrite_partitions(schema.name, inc)
     else:
         store.append(schema.name, inc)
     if obs is None:
-        return None
+        return LoadReport(None, value)
     try:
-        return int(obs.get["n"])
+        seen = obs.get
+        return LoadReport(int(seen["n"]), value, seen["hi"])
     except Exception:
         # An empty increment schedules zero tasks, so the observation
         # collects no metric row. CONFIRM that before reporting 0 —
@@ -116,5 +163,5 @@ def ingest(
         # the unobserved plan is cheap either way: first-row
         # short-circuit when rows exist, empty pruned scan when not.)
         if inc_plain.isEmpty():
-            return 0
+            return LoadReport(0, value)
         raise

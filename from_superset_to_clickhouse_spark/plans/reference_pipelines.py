@@ -24,8 +24,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from from_superset_to_clickhouse_spark.functions.scalar import mod_shard, months_ago
-from from_superset_to_clickhouse_spark.operators.ingest import build_increment, ingest
+from from_superset_to_clickhouse_spark.functions.scalar import (
+    mod_shard,
+    months_ago,
+    months_ago_at,
+    session_zone,
+)
+from from_superset_to_clickhouse_spark.operators.ingest import (
+    build_increment,
+    ingest,
+    load_increment,
+)
 from from_superset_to_clickhouse_spark.plans.pipeline import Pipeline, SkipStep, Step
 from from_superset_to_clickhouse_spark.schema import Schema
 from from_superset_to_clickhouse_spark.sources.readers import read_jdbc, write_jdbc
@@ -61,6 +70,8 @@ def v2_daily_load(
     snapshot, and a rerun is a no-op rather than a duplication.
     """
 
+    fact_load = {}
+
     def create(ctx):
         store.create(fact_schema, if_not_exists=True)
         if dim_schema is not None:
@@ -68,10 +79,12 @@ def v2_daily_load(
         return "created"
 
     def upload_fact(ctx):
-        return ingest(
+        report = load_increment(
             store, fact_source, fact_schema, fact_watermark,
             source_tag=source_tag, strict=True, count_rows=True,
         )
+        fact_load["report"] = report
+        return report.rows
 
     def upload_dim(ctx):
         if dim_schema is None:
@@ -85,11 +98,20 @@ def v2_daily_load(
         # Reference: never delete from the legacy database (v2/dag.py:126-130).
         if ctx.get("connection") == "superset_old":
             raise SkipStep("legacy source — retention delete skipped")
-        anchor = wm.probe(store.read(fact_schema.name), fact_watermark)
-        cutoff = months_ago(retention_months, F.lit(anchor))
-        return store.delete_where(
-            fact_schema.name, F.col(fact_watermark) < cutoff
+        # The fact table's watermark after the upload, from the upload's
+        # own probe and observation: no second MAX scan. The strict ``>``
+        # increment puts any loaded row above the probed watermark.
+        report = fact_load["report"]
+        anchor = (
+            report.watermark if report.batch_max is None else report.batch_max
         )
+        zone = session_zone(store.spark)
+        cutoff = (
+            months_ago_at(retention_months, anchor, zone)
+            if zone is not None
+            else months_ago(retention_months, F.lit(anchor))
+        )
+        return store.delete_before(fact_schema.name, fact_watermark, cutoff)
 
     def compact(ctx):
         store.compact(fact_schema.name)

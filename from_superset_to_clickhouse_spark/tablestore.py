@@ -32,7 +32,9 @@ second writer fails fast instead of corrupting the sequence.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
+import operator
 import os
 import posixpath
 import time
@@ -41,9 +43,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from from_superset_to_clickhouse_spark.fsio import Fs, join
-from from_superset_to_clickhouse_spark.functions.scalar import month_floor
+from from_superset_to_clickhouse_spark.functions.scalar import month_floor, session_zone
 from from_superset_to_clickhouse_spark.schema import Schema
 
 INGEST_SEQ_COL = "_ingest_seq"
@@ -52,6 +55,30 @@ META_FILE = "_table_meta.json"
 # under this land in a single write task with or without clustering,
 # so the pre-write REBALANCE would be a pure extra exchange.
 _ADVISORY_PARTITION_BYTES = 64 * 1024 * 1024
+
+# Bytes per value of the fixed-width types (Spark's own sizes); other
+# atomic types such as decimals count as 16.
+_FIXED_WIDTHS = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.DateType: 4, T.FloatType: 4, T.LongType: 8, T.DoubleType: 8,
+    T.TimestampType: 8, T.TimestampNTZType: 8,
+}
+
+
+def _fixed_width(t: T.DataType) -> int:
+    return _FIXED_WIDTHS.get(type(t), 16)
+
+
+def _width_expr(f: T.StructField) -> Column | None:
+    """Per-row byte count of a variable-width column (strings and
+    binaries as stored, nested values as their JSON text), or None for a
+    fixed-width one."""
+    if isinstance(f.dataType, (T.StringType, T.BinaryType)):
+        return F.octet_length(F.col(f.name))
+    if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
+        return F.octet_length(F.to_json(F.col(f.name)))
+    return None
+
 
 # Derived partition columns the engine knows how to materialize. The
 # reference's only derived partition expr is date_trunc('month', dttm)
@@ -106,6 +133,7 @@ class TableStore:
             "shard_by": schema.shard_by,
             "sum_cols": list(schema.sum_cols),
             "ingest_seq": 0,
+            "uncompacted": {"through_seq": 0, "ranges": {}},
         }
         self.fs.write_text(join(p, META_FILE), json.dumps(meta))
 
@@ -314,7 +342,7 @@ class TableStore:
         if parts:
             w = w.partitionBy(*parts)
         w.parquet(join(self.path(name), "data"))
-        self._update_indexes(name, out, mode="merge")
+        self._update_indexes(name, out, mode="merge", batch_seq=seq)
         self._update_projections(name, out)
 
     def overwrite_partitions(self, name: str, df: DataFrame) -> None:
@@ -337,7 +365,7 @@ class TableStore:
             .partitionBy(*parts)
             .parquet(join(self.path(name), "data"))
         )
-        self._update_indexes(name, out, mode="replace")
+        self._update_indexes(name, out, mode="replace", batch_seq=seq)
         self._mark_projections_stale(name)
 
     def overwrite(self, name: str, df: DataFrame) -> None:
@@ -348,7 +376,7 @@ class TableStore:
         if parts:
             w = w.partitionBy(*parts)
         w.parquet(join(self.path(name), "data"))
-        self._update_indexes(name, out, mode="reset")
+        self._update_indexes(name, out, mode="reset", batch_seq=seq)
         self._mark_projections_stale(name)
 
     # -- zone maps (sort-key min/max per partition — data skipping) ---------
@@ -403,6 +431,7 @@ class TableStore:
         zone: bool = True,
         bloom_cols: "list[str] | None" = None,
         ngram_cols: "list[str] | None" = None,
+        batch_seq: int | None = None,
     ) -> None:
         """Fused skip-index maintenance (r16 optimization round, guide
         §2.4/§6): ONE aggregate job over the staged batch refreshes the
@@ -425,6 +454,13 @@ class TableStore:
         forever. ``zone``/``bloom_cols``/``ngram_cols`` restrict the
         maintained set (the ``add_*_index`` backfills refresh exactly
         one structure); ``None`` means every declared one.
+
+        ``batch_seq`` marks ``staged`` as the batch a write just stamped
+        with that ingest sequence. The same aggregate then also takes the
+        batch's dedup-key range per partition and folds it into the
+        compaction record (``_record_batch_keys``); a write whose table
+        keeps no skip index runs no aggregate, so its record lags and the
+        next ``compact`` checks the whole table.
 
         Shuffle cost is the same as the separate passes it fuses: the
         position explode is map-side collect_set-combined, so at most
@@ -483,6 +519,23 @@ class TableStore:
         if zcol is not None:
             sel.append(F.col(zcol).alias("_z"))
             aggs += [F.min("_z").alias("_mn"), F.max("_z").alias("_mx")]
+        key_enc = None
+        if batch_seq is not None:
+            key_enc = self._key_encoding(meta, staged)
+        if key_enc is not None:
+            kcol = meta["dedup_key"][0]
+            sel.append(F.col(kcol).isNull().alias("_kn"))
+            aggs.append(F.max("_kn").alias("_knull"))
+            if kcol == zcol and not isinstance(
+                staged.schema[kcol].dataType, T.TimestampType
+            ):
+                # The zone map already takes this column's bounds; every
+                # extra aggregate runs once per exploded bloom position.
+                key_bounds = ("_mn", "_mx")
+            else:
+                sel.append(key_enc.alias("_k"))
+                aggs += [F.min("_k").alias("_kmn"), F.max("_k").alias("_kmx")]
+                key_bounds = ("_kmn", "_kmx")
         if arrs:
             # explode_outer keeps rows whose position arrays are all
             # empty, so every touched partition reaches the aggregate.
@@ -539,6 +592,8 @@ class TableStore:
             else:
                 ngram_idxs[c] = idx
                 meta["ngram_bloom_indexes"] = ngram_idxs
+        if key_enc is not None:
+            self._record_batch_keys(meta, rows, mode, batch_seq, key_bounds)
         self._save_meta(name, meta)
 
     def zone_prune_partitions(
@@ -946,46 +1001,67 @@ class TableStore:
 
     # -- read paths ----------------------------------------------------------
 
+    @staticmethod
+    def _read_schema(meta: dict) -> T.StructType:
+        """The table's schema as ``read`` returns it, from the meta alone:
+        the declared fields (partition columns excluded) with their
+        declared types, ``_ingest_seq``, then the partition columns — the
+        column order of a partitioned Parquet scan. Declared partition
+        columns keep their declared type; derived ones are dates. Types
+        go through Spark's DDL parser, so any alias Spark accepts
+        (``long``, ``integer``, ``decimal(10,2)``) is valid in the meta."""
+        parts = meta["partition_by"]
+        declared = {n: t for n, t, _nb, _d in meta["fields"]}
+
+        def col(n: str, t: str, nullable: bool = True) -> str:
+            quoted = n.replace("`", "``")
+            return f"`{quoted}` {t}" + ("" if nullable else " NOT NULL")
+
+        cols = [col(n, t, nb) for n, t, nb, _d in meta["fields"] if n not in parts]
+        cols.append(col(INGEST_SEQ_COL, "bigint"))
+        cols += [col(p, declared.get(p, "date")) for p in parts]
+        return T.StructType.fromDDL(", ".join(cols))
+
     def read(self, name: str) -> DataFrame:
         """Raw read — may contain not-yet-compacted duplicate keys (the
-        ClickHouse "SELECT without FINAL" view). A data dir holding only
-        write markers (``_SUCCESS``/checksums from an empty append, or a
-        ``_temporary`` dir mid-write) serves the empty-schema fallback
-        like a missing dir — parquet schema inference would fail on it,
-        and a read must NEVER mutate storage (deleting here would race a
-        concurrent in-flight first write's ``_temporary`` dir)."""
+        ClickHouse "SELECT without FINAL" view).
+
+        The scan carries the schema derived from the table meta
+        (``_read_schema``), so planning a read opens no file footer and
+        submits no schema-inference job. The same schema serves a table
+        with no data files: a missing data dir, or one holding only write
+        markers (``_SUCCESS`` from an empty append, or a ``_temporary``
+        dir mid-write) reads as an empty frame. A read never mutates
+        storage (deleting markers here would race a concurrent in-flight
+        first write's ``_temporary`` dir).
+
+        Columns added by ``add_column`` are in the derived schema too:
+        files written before the ALTER lack them and read them as NULL,
+        and the declared DEFAULT fills those NULLs — the ClickHouse
+        ALTER ADD COLUMN semantic, with no data rewrite. ``compact`` and
+        ``optimize`` materialize the default physically."""
+        meta = self._meta(name)
         data = join(self.path(name), "data")
         no_data = not self.fs.exists(data) or all(
             e.startswith(("_", ".")) for e in self.fs.listdir(data)
         )
         if no_data:
-            meta = self._meta(name)
-            from from_superset_to_clickhouse_spark.schema import Field, Schema as S
+            return self.spark.createDataFrame([], self._read_schema(meta))
+        return self._scan(meta, data)
 
-            fields = tuple(Field(n, t, nb, d) for n, t, nb, d in meta["fields"])
-            schema = S(name, fields).to_struct_type().add(INGEST_SEQ_COL, "long")
-            for p in meta["partition_by"]:
-                if p not in [f.name for f in fields]:
-                    schema = schema.add(p, "date")
-            return self.spark.createDataFrame([], schema)
-        meta = self._meta(name)
-        evolved = meta.get("evolved_defaults") or {}
-        if not evolved:
-            return self.spark.read.parquet(data)
-        # Schema evolution read: files written before add_column() lack
-        # the evolved columns. mergeSchema unions all file footers (paid
-        # only on evolved tables — it reads every footer, so plain
-        # tables keep the cheap single-footer planning path) and the
-        # declared DEFAULT backfills lazily, the ClickHouse
-        # ALTER ADD COLUMN semantic: no data rewrite, old rows read as
-        # the default. compact()/optimize() materialize it physically.
-        df = self.spark.read.option("mergeSchema", "true").parquet(data)
-        for cname, (dtype, default) in evolved.items():
-            filler = F.lit(default).cast(dtype)
-            if cname not in df.columns:
-                df = df.withColumn(cname, filler)
-            elif default is not None:
-                df = df.withColumn(cname, F.coalesce(F.col(cname), filler))
+    def _scan(self, meta: dict, *paths: str, base: str | None = None) -> DataFrame:
+        """Parquet scan of table files under the meta-derived schema,
+        with evolved columns' DEFAULT filled in. ``base`` is the data dir
+        when ``paths`` are partition dirs below it."""
+        reader = self.spark.read.schema(self._read_schema(meta))
+        if base is not None:
+            reader = reader.option("basePath", base)
+        df = reader.parquet(*paths)
+        for cname, (dtype, default) in (meta.get("evolved_defaults") or {}).items():
+            if default is not None:
+                df = df.withColumn(
+                    cname, F.coalesce(F.col(cname), F.lit(default).cast(dtype))
+                )
         return df
 
     def current_seq(self, name: str) -> int:
@@ -1119,9 +1195,18 @@ class TableStore:
         only partitions that actually contain duplicate keys are
         rewritten and swapped (mirrors ClickHouse, whose background
         merges — and REPLACE PARTITION — are per-partition; a 100 TB
-        table with one hot month compacts only that month). Unpartitioned
-        or keyless tables fall back to a full rewrite. ``latest_view``
-        remains the globally-correct read regardless of compaction state.
+        table with one hot month compacts only that month). The search
+        for duplicates reads only what was written since the last
+        compaction: the compaction record holds, per partition written,
+        the dedup-key range of those writes, and the check reads those
+        partitions and ranges, the ranges pushed to Parquet row-group
+        stats. With nothing written since, it submits no job. When the
+        record is missing, lags the ingest sequence (a write crashed
+        before its meta save, or the table keeps no skip index to carry
+        it), or was dropped by a key-assigning ``update_where``, the
+        check reads the whole table. Unpartitioned, keyless and summing
+        tables are rewritten whole. ``latest_view`` is the correct read
+        whatever the compaction state.
         """
         meta = self._meta(name)
         parts = meta["partition_by"]
@@ -1363,24 +1448,142 @@ class TableStore:
         if self.fs.exists(tmp):
             self.fs.delete(tmp)
 
+    # -- compaction record (the dedup-key ranges written since the last
+    # compaction) --------------------------------------------------------
+    #
+    # meta["uncompacted"] = {"through_seq": s, "ranges": {part: [lo, hi,
+    # has_null]}}: for each partition a write touched since the last
+    # compaction, the range of the first dedup-key column it wrote there.
+    # A duplicate pair shares its partition and its key, and the table
+    # holds no duplicates right after a compaction, so every pair that
+    # exists involves a recorded write and lies inside its partition's
+    # range. The record is complete only through ``through_seq``: a write
+    # that bumps the ingest sequence without extending the record (a
+    # crash before its meta save, or a table without skip indexes) leaves
+    # it lagging, and compaction then checks the whole table — the same
+    # lag test as a projection's ``as_of_seq``.
+
+    # Types whose values keep their order through JSON and back: no
+    # decimals (kept as text, they would compare as text) and no floats
+    # (NaN breaks min/max).
+    _KEY_TYPES = (T.IntegralType, T.StringType, T.DateType, T.BooleanType, T.TimestampType)
+    _PART_TYPES = (T.IntegralType, T.StringType, T.DateType, T.BooleanType)
+
+    def _key_encoding(self, meta: dict, staged: DataFrame) -> Column | None:
+        """The JSON-safe form in which the compaction record keeps the
+        first dedup-key column, or None when the table's layout cannot be
+        recorded: no dedup key, not exactly one partition column, or a
+        key / partition type outside ``_KEY_TYPES`` / ``_PART_TYPES``.
+        Timestamps are kept as epoch microseconds and dates as ISO text,
+        so the record does not depend on any time zone."""
+        key, parts = meta["dedup_key"], meta["partition_by"]
+        if not key or len(parts) != 1 or meta.get("sum_cols"):
+            return None
+        if key[0] not in staged.columns or parts[0] not in staged.columns:
+            return None
+        ktype = staged.schema[key[0]].dataType
+        ptype = staged.schema[parts[0]].dataType
+        if not isinstance(ktype, self._KEY_TYPES) or not isinstance(ptype, self._PART_TYPES):
+            return None
+        if isinstance(ktype, T.TimestampType):
+            return F.unix_micros(F.col(key[0]))
+        return F.col(key[0])
+
+    @staticmethod
+    def _key_json(v):
+        return v.isoformat() if isinstance(v, dt.date) else v
+
+    def _record_batch_keys(
+        self, meta: dict, rows: list, mode: str, seq: int, bounds: tuple[str, str]
+    ) -> None:
+        """Fold one write's per-partition key ranges (the ``bounds``
+        min / max columns and the ``_knull`` flag of the index aggregate)
+        into the compaction record. ``reset`` replaced the whole table, so the
+        batch's ranges are the whole record; ``replace`` replaced the
+        touched partitions, so their ranges become the batch's; ``merge``
+        widens them. A lagging record stays lagging, except after a reset."""
+        rec = meta.get("uncompacted")
+        if mode == "reset":
+            rec = {"through_seq": seq - 1, "ranges": {}}
+        elif rec is None or rec["through_seq"] != seq - 1:
+            return
+        ranges = dict(rec["ranges"])
+        for r in rows:
+            pk = self._zone_part_key(r["_p"])
+            lo, hi = self._key_json(r[bounds[0]]), self._key_json(r[bounds[1]])
+            null = bool(r["_knull"])
+            if mode == "merge" and pk in ranges:
+                olo, ohi, onull = ranges[pk]
+                lo = olo if lo is None else lo if olo is None else min(olo, lo)
+                hi = ohi if hi is None else hi if ohi is None else max(ohi, hi)
+                null = null or onull
+            ranges[pk] = [lo, hi, null]
+        meta["uncompacted"] = {"through_seq": seq, "ranges": ranges}
+
+    def _compact_scope(self, meta: dict, df: DataFrame) -> Column:
+        """The rows a compaction must check, from a complete, non-empty
+        record: per recorded partition, the recorded key range (plus an
+        ``IS NULL`` arm where NULL keys were written). A conjunct over
+        the global key range reaches the Parquet row-group stats; the
+        per-partition disjunction prunes directories."""
+        ranges = meta["uncompacted"]["ranges"]
+        part, kcol = meta["partition_by"][0], meta["dedup_key"][0]
+        ptype, ktype = df.schema[part].dataType, df.schema[kcol].dataType
+        k = F.col(kcol)
+
+        def bound(v) -> Column:
+            if isinstance(ktype, T.TimestampType):
+                return F.timestamp_micros(F.lit(v))
+            return F.lit(v).cast(ktype)
+
+        def key_in(lo, hi, null) -> Column:
+            c = k.between(bound(lo), bound(hi)) if lo is not None else F.lit(False)
+            return c | k.isNull() if null else c
+
+        arms = []
+        for pk, (lo, hi, null) in ranges.items():
+            in_part = (
+                F.col(part).isNull()
+                if pk == self._HIVE_NULL
+                else F.col(part) == F.lit(pk).cast(ptype)
+            )
+            arms.append(in_part & key_in(lo, hi, null))
+        bounded = [v for v in ranges.values() if v[0] is not None]
+        overall = key_in(
+            min((v[0] for v in bounded), default=None),
+            max((v[1] for v in bounded), default=None),
+            any(v[2] for v in ranges.values()),
+        )
+        return functools.reduce(operator.or_, arms) & overall
+
     def _compact_partitionwise(self, name: str, meta: dict) -> None:
         """Rewrite only the partitions that hold duplicate dedup keys.
 
-        1. One agg finds (partition, key) groups with >1 row → the small
-           set of affected partition values (collected — it is bounded by
-           the partition count, not the data).
+        1. One aggregate finds the (partition, key) groups with more than
+           one row and collects their partition values (bounded by the
+           partition count, not the data). It reads only the rows the
+           compaction record scopes (``_compact_scope``): the key ranges
+           written since the last compaction, in the partitions written.
+           With nothing written it runs no job at all; with a missing or
+           lagging record it reads the whole table.
         2. Within-partition latest-per-key rows for those partitions are
            staged to a temp dir (window over (partition, key) — same
            scope as a ClickHouse merge). The affected-partition filter is
            NULL-safe (``eqNullSafe``), so NULL-partition rows compact too.
         3. Each staged partition directory (named by what Spark actually
            wrote, not reconstructed from values) is swapped in two phases.
+        4. The record restarts empty at the current ingest sequence.
         """
         parts = meta["partition_by"]
         key = meta["dedup_key"]
+        rec = meta.get("uncompacted")
+        complete = rec is not None and rec["through_seq"] == meta["ingest_seq"]
+        if complete and not rec["ranges"]:
+            return
         df = self.read(name)
+        checked = df.filter(self._compact_scope(meta, df)) if complete else df
         dup_rows = (
-            df.groupBy(*parts, *key)
+            checked.groupBy(*parts, *key)
             .count()
             .filter(F.col("count") > 1)
             .select(*parts)
@@ -1388,6 +1591,7 @@ class TableStore:
             .collect()
         )
         if not dup_rows:
+            self._restart_compaction_record(name)
             return
         affected = None
         for r in dup_rows:
@@ -1419,6 +1623,14 @@ class TableStore:
         tmp = join(self.path(name), "data_compacting")
         out.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
         self._swap_in(name, tmp)
+        self._restart_compaction_record(name)
+
+    def _restart_compaction_record(self, name: str) -> None:
+        """The table holds no duplicates as of its current ingest
+        sequence: the record restarts empty there."""
+        meta = self._meta(name)
+        meta["uncompacted"] = {"through_seq": meta["ingest_seq"], "ranges": {}}
+        self._save_meta(name, meta)
 
     # -- metadata (SURVEY §2.7 row 38) ---------------------------------------
 
@@ -1574,7 +1786,10 @@ class TableStore:
         cond = F.coalesce(condition, F.lit(False))
         if not parts:
             return self._delete_full_rewrite(name, df, cond)
-        n_del, rels, affected = self._hit_partitions(name, df, cond)
+        # The hit scan filters on the bare condition (a filter drops NULL
+        # like FALSE): wrapped in coalesce, a partition-column conjunct
+        # could not be split off to prune directories.
+        n_del, rels, affected = self._hit_partitions(name, df, condition)
         if n_del == 0:
             return 0
         self._mark_projections_stale(name)
@@ -1585,6 +1800,54 @@ class TableStore:
         if not any("=" in e for e in self.fs.listdir(data)):
             self.fs.delete(data)
         return n_del
+
+    def delete_before(self, name: str, col: str, cutoff) -> int:
+        """Retention delete: remove the rows whose ``col`` is before
+        ``cutoff`` and return how many. ``cutoff`` is a datetime or date
+        (a naive datetime is local time, as ``F.lit`` reads it) or a
+        Column.
+
+        On a table partitioned by a column derived from ``col``
+        (``ts_month`` / ``ts_day`` from ``ts``), a partition that starts
+        at or after the cutoff holds no row to delete, and the partition
+        directory names alone say where each partition starts. Those
+        partitions are skipped; when none is left, nothing is read and no
+        Spark job runs. Otherwise ``delete_where`` runs with the left
+        partitions as a partition filter, so only they are scanned. NULL
+        values of ``col`` are kept (SQL DELETE semantics), so the NULL
+        partition is never read. A Column cutoff, another layout, or a
+        session time zone ``session_zone`` cannot read goes straight to
+        ``delete_where``."""
+        lit = cutoff if isinstance(cutoff, Column) else F.lit(cutoff)
+        cond = F.col(col) < lit
+        parts = self._meta(name)["partition_by"]
+        zone = session_zone(self.spark)
+        if (
+            isinstance(cutoff, Column)
+            or zone is None
+            or len(parts) != 1
+            or parts[0] not in _DERIVED_PARTITIONS
+            or parts[0].rsplit("_", 1)[0] != col
+        ):
+            return self.delete_where(name, cond)
+        if isinstance(cutoff, dt.datetime):
+            local = cutoff.astimezone(zone).replace(tzinfo=None)
+        else:
+            local = dt.datetime.combine(cutoff, dt.time())
+        candidates = []
+        for rel in self.partitions(name):
+            value = urllib.parse.unquote(rel.split("=", 1)[1])
+            if value == self._HIVE_NULL:
+                continue
+            try:
+                start = dt.datetime.combine(dt.date.fromisoformat(value), dt.time())
+            except ValueError:
+                start = None  # not a date: cannot be ruled out
+            if start is None or start < local:
+                candidates.append(rel)
+        if not candidates:
+            return 0
+        return self.delete_where(name, cond & self._rel_filter(parts, candidates))
 
     def _hit_partitions(self, name: str, df: DataFrame, cond):
         """(match count, affected partition rel-dirs, affected rows DF)
@@ -1612,8 +1875,8 @@ class TableStore:
             posixpath.relpath(urllib.parse.unquote(urllib.parse.urlparse(u).path), base_path)
             for u in hit["dirs"]
         )
-        affected = self.spark.read.option("basePath", data_base).parquet(
-            *[join(data_base, r) for r in rels]
+        affected = self._scan(
+            self._meta(name), *[join(data_base, r) for r in rels], base=data_base
         )
         return hit["n"], rels, affected
 
@@ -1678,9 +1941,16 @@ class TableStore:
             self.fs.rename(tmp, data)
             self.fs.delete(old)
             return n_upd
-        n_upd, rels, affected = self._hit_partitions(name, df, cond)
+        n_upd, rels, affected = self._hit_partitions(name, df, condition)
         if n_upd == 0:
             return 0
+        if set(assignments) & set(meta["dedup_key"]):
+            # A key assignment can collide rows outside every range the
+            # compaction record holds: drop the record before the rewrite,
+            # so the next compact checks the whole table.
+            fresh = self._meta(name)
+            fresh["uncompacted"] = None
+            self._save_meta(name, fresh)
         self._mark_projections_stale(name)
         updated = apply(affected)
         tmp = join(self.path(name), "data_updating")
@@ -1758,7 +2028,17 @@ class TableStore:
         would make the update non-deterministic); key and
         partition(-source) columns cannot be updated; dedup-keyed
         tables refuse MERGE (their append IS an upsert — use append +
-        latest_view/compact)."""
+        latest_view/compact).
+
+        Inserts commit in two steps on a partitioned table. Inserts into
+        partitions the merge rewrites land with the rewrite's swap; the
+        rest land in a later ``append``. A crash between the two leaves
+        a partial state: the updates and the first inserts applied, the
+        other inserts missing, and no staging directory or marker that
+        records it. Re-running an upsert with the same source completes
+        it (the inserted rows now match and update to the same values);
+        re-running a ``delete_matched`` merge does not, since it deletes
+        the rows the first run inserted."""
         meta = self._meta(name)
         if meta.get("dedup_key"):
             raise ValueError(
@@ -1793,21 +2073,32 @@ class TableStore:
             )
         from pyspark.sql import Observation
 
+        # The checkpoint job also measures the source: its row count and
+        # the bytes of every variable-width column, so the broadcast
+        # decisions below use real sizes at no extra job.
+        measured = [f for f in source.schema.fields if _width_expr(f) is not None]
+        sizes = [F.count(F.lit(1)).alias("n")] + [
+            F.sum(_width_expr(f)).alias(f"_b{i}") for i, f in enumerate(measured)
+        ]
         src_obs = Observation()
-        src = source.observe(
-            src_obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        n_src = int(src_obs.get["n"])
+        src = source.observe(src_obs, *sizes).localCheckpoint(eager=True)
+        try:
+            seen = src_obs.get
+        except Exception:
+            # An empty source can checkpoint with zero tasks, and the
+            # observation then collects no metric row (the ingest.py
+            # precedent): measure the checkpointed frame instead.
+            seen = src.agg(*sizes).first()
+        n_src = int(seen["n"])
+        col_bytes = {f.name: n_src * _fixed_width(f.dataType) for f in source.schema.fields}
+        col_bytes.update({f.name: int(seen[f"_b{i}"] or 0) for i, f in enumerate(measured)})
 
-        # r16 (guide §3.1): a localCheckpointed source has no size
-        # statistics, so the planner can never auto-broadcast it and
-        # both merge joins fall back to shuffling the TARGET side. We
-        # know the exact row count (it rode the checkpoint job above);
-        # with Catalyst's own static per-row width that is the same
-        # sizing rule the planner applies when stats exist — hint
-        # broadcast only when the estimate clears the session threshold,
-        # so an outsized upsert batch still shuffle-joins.
-        def _maybe_broadcast(d: DataFrame) -> DataFrame:
+        # A localCheckpointed source has no size statistics, so the
+        # planner never auto-broadcasts it and both merge joins would
+        # shuffle the TARGET side. Hint a broadcast when the frame's
+        # measured bytes fit the session threshold, so an outsized
+        # upsert batch (many rows, or wide text) still shuffle-joins.
+        def _maybe_broadcast(d: DataFrame, cols: list[str]) -> DataFrame:
             try:
                 thr = int(
                     str(
@@ -1820,11 +2111,11 @@ class TableStore:
                 thr = 10 * 1024 * 1024
             if thr <= 0:
                 return d
-            est = n_src * int(d._jdf.schema().defaultSize())
+            est = sum(col_bytes[c] for c in cols)
             return F.broadcast(d) if est <= thr else d
 
         df = self.read(name)
-        src_keys = _maybe_broadcast(src.select(*on).distinct())
+        src_keys = _maybe_broadcast(src.select(*on).distinct(), on)
         data = join(self.path(name), "data")
 
         # r16 (guide §2.6): the duplicate-key gate, the not-matched
@@ -1910,8 +2201,8 @@ class TableStore:
                     for u in hit["dirs"]
                 )
                 affected = (
-                    self.spark.read.option("basePath", data_base).parquet(
-                        *[join(data_base, r) for r in rels]
+                    self._scan(
+                        meta, *[join(data_base, r) for r in rels], base=data_base
                     )
                     if parts
                     else df
@@ -1921,7 +2212,8 @@ class TableStore:
                         *on,
                         F.lit(1).alias("_m"),
                         *[F.col(c).alias("_src_" + c) for c in update_cols],
-                    )
+                    ),
+                    on + update_cols,
                 )
                 joined = affected.join(upd_src, on, "left")
                 if delete_matched:

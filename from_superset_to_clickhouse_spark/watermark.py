@@ -26,10 +26,13 @@ BOOTSTRAP = dt.datetime(2000, 1, 1)  # v1/dag.py:72, v2/dag.py:114
 def probe(df: DataFrame, field: str, bootstrap: Any = BOOTSTRAP) -> Any:
     """Global-MAX watermark probe; bootstrap fallback on empty/NULL.
 
-    The only sanctioned ``collect()`` in the engine — a single scalar.
-    Spark computes MAX with partial aggregation (per-partition max, then
-    one-row merge), so this is a metadata-cheap full scan; on Parquet the
-    scan reads only the probed column.
+    Collects a single scalar. Spark computes MAX with partial
+    aggregation (per-partition max, then a one-row merge); on Parquet
+    the scan reads only the probed column, but it reads that column for
+    the whole table, so its cost grows with the history. A load probes
+    once: ``operators.ingest.load_increment`` reports the batch's own
+    MAX from the write's ``Observation``, and the larger of the two is
+    the target's watermark after the load.
     """
     row = df.agg(F.max(F.col(field)).alias("wm")).first()
     wm = row["wm"] if row else None

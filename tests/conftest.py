@@ -1,4 +1,5 @@
 import datetime as dt
+import uuid
 
 import pytest
 
@@ -37,3 +38,19 @@ def logs_schema(name: str = "t") -> Schema:
 
 def ts(month: int, day: int, hour: int = 0) -> dt.datetime:
     return dt.datetime(2024, month, day, hour)
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn submitted from this thread)``,
+    counted through a job group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # The status store is fed by the listener bus, asynchronously.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -6,16 +6,23 @@ compact (ADVICE r2 high) and partition-pruned delete_where (VERDICT r2
 wrong-item 1).
 """
 
+import contextlib
 import datetime as dt
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from from_superset_to_clickhouse_spark.functions.scalar import (
+    months_ago,
+    months_ago_at,
+    session_zone,
+)
 from from_superset_to_clickhouse_spark.schema import Field, Schema
 from from_superset_to_clickhouse_spark.tablestore import TableStore
 
-from conftest import logs_schema, ts
+from conftest import count_jobs, logs_schema, ts
 
 
 @pytest.fixture()
@@ -1366,3 +1373,332 @@ def test_fused_index_maintenance_all_structures_one_table(spark, tmp_path):
     # prune results stay exactly equal to the full filter
     assert [r["id"] for r in store.read_like("t", "s", "needle").collect()] == [5]
     assert store.read_eq("t", "s", "delta-hay").count() == 1
+
+
+# -- change-scoped compaction: the record of key ranges written since the
+# last compaction must never hide a duplicate --------------------------------
+
+
+def _ids(store, name):
+    return {r["id"]: r["v"] for r in store.read(name).collect()}
+
+
+def test_compact_record_scopes_the_check_and_idles_without_jobs(spark, store):
+    store.create(logs_schema("r0"))
+    store.append("r0", _mkdf(spark, [(1, ts(1, 5), "a"), (2, ts(2, 5), "b")]))
+    store.compact("r0")
+    _, jobs = count_jobs(spark, lambda: store.compact("r0"))
+    assert jobs == 0
+    store.append("r0", _mkdf(spark, [(2, ts(2, 9), "b2")]))
+    assert store._meta("r0")["uncompacted"] == {
+        "through_seq": 2, "ranges": {"2024-02-01": [2, 2, False]},
+    }
+    store.compact("r0")
+    assert store.read("r0").count() == 2
+    assert _ids(store, "r0") == {1: "a", 2: "b2"}
+    assert store._meta("r0")["uncompacted"] == {"through_seq": 2, "ranges": {}}
+
+
+@pytest.mark.parametrize(
+    "key, sort_by",
+    [("id", "v"), ("dttm", "dttm")],  # key apart from the zone column; timestamp key
+)
+def test_compact_record_keeps_its_own_key_bounds(spark, store, key, sort_by):
+    sch = Schema(
+        name="rk",
+        fields=logs_schema().fields,
+        dedup_key=(key,),
+        partition_by=("dttm_month",),
+        sort_by=(sort_by,),
+    )
+    store.create(sch)
+    store.append("rk", _mkdf(spark, [(1, ts(1, 5), "a"), (2, ts(1, 6), "b")]))
+    store.compact("rk")
+    store.append("rk", _mkdf(spark, [(1, ts(1, 5), "a2"), (2, ts(1, 6), "b2")]))
+    assert list(store._meta("rk")["uncompacted"]["ranges"]) == ["2024-01-01"]
+    store.compact("rk")
+    assert sorted(r["v"] for r in store.read("rk").collect()) == ["a2", "b2"]
+
+
+def test_compact_after_crash_between_data_commit_and_meta_save(
+    spark, store, monkeypatch
+):
+    store.create(logs_schema("r1"))
+    store.append("r1", _mkdf(spark, [(1, ts(1, 5), "a"), (2, ts(1, 6), "b")]))
+    store.compact("r1")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash after the data commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(TableStore, "_update_indexes", crash)
+        with pytest.raises(RuntimeError):
+            store.append("r1", _mkdf(spark, [(1, ts(1, 7), "a2")]))
+    # A later write with a narrow, disjoint key range must not make the
+    # lagging record look complete.
+    store.append("r1", _mkdf(spark, [(9, ts(1, 8), "z")]))
+    store.compact("r1")
+    assert store.read("r1").count() == 3
+    assert _ids(store, "r1") == {1: "a2", 2: "b", 9: "z"}
+
+
+def test_compact_after_update_assigning_the_dedup_key(spark, store):
+    store.create(logs_schema("r2"))
+    store.append(
+        "r2", _mkdf(spark, [(1, ts(1, 5), "a"), (2, ts(1, 6), "b"), (3, ts(2, 7), "c")])
+    )
+    store.compact("r2")
+    store.append("r2", _mkdf(spark, [(3, ts(2, 9), "c2")]))  # records February only
+    # The collision lands in January, which no recorded range covers.
+    assert store.update_where("r2", F.col("id") == 2, {"id": F.lit(1)}) == 1
+    store.compact("r2")
+    assert store.read("r2").count() == 2
+    assert _ids(store, "r2") == {1: "b", 3: "c2"}
+
+
+def test_compact_record_has_a_null_key_arm(spark, store):
+    sch = Schema(
+        name="r3",
+        fields=(
+            Field("id", "int"),
+            Field("dttm", "timestamp", nullable=False),
+            Field("v", "string"),
+        ),
+        dedup_key=("id",),
+        version_col="dttm",
+        partition_by=("dttm_month",),
+        sort_by=("id",),
+    )
+    store.create(sch)
+    store.append("r3", _mkdf(spark, [(None, ts(1, 5), "n1"), (1, ts(1, 5), "a")]))
+    store.compact("r3")
+    store.append("r3", _mkdf(spark, [(None, ts(1, 9), "n2"), (5, ts(1, 9), "e")]))
+    assert store._meta("r3")["uncompacted"]["ranges"] == {"2024-01-01": [5, 5, True]}
+    store.compact("r3")
+    rows = sorted(
+        ((r["id"], r["v"]) for r in store.read("r3").collect()),
+        key=lambda t: (t[0] is not None, t[0] or 0),
+    )
+    assert rows == [(None, "n2"), (1, "a"), (5, "e")]
+
+
+def test_compact_record_with_random_non_monotone_keys(spark, store):
+    rng = random.Random(7)
+    store.create(logs_schema("r4"))
+    want = {}
+    for batch in range(4):
+        rows = []
+        for k in rng.sample(range(300), 60):
+            # a key keeps its month; later batches carry later versions
+            rows.append((k, ts(1 + k % 3, 1 + batch, rng.randrange(24)), f"b{batch}"))
+            want[k] = f"b{batch}"
+        store.append("r4", _mkdf(spark, rows))
+        if batch % 2:
+            store.compact("r4")
+    assert store.read("r4").count() == len(want)
+    assert _ids(store, "r4") == want
+
+
+def test_compact_without_zone_map_checks_the_whole_table(spark, store):
+    sch = Schema(
+        name="r5",
+        fields=logs_schema().fields,
+        dedup_key=("id",),
+        version_col="dttm",
+        partition_by=("dttm_month",),
+    )
+    store.create(sch)
+    store.append("r5", _mkdf(spark, [(1, ts(1, 5), "a"), (2, ts(2, 5), "b")]))
+    store.compact("r5")
+    store.append("r5", _mkdf(spark, [(1, ts(1, 9), "a2")]))
+    meta = store._meta("r5")
+    assert meta["uncompacted"]["through_seq"] < meta["ingest_seq"]  # lags
+    store.compact("r5")
+    assert store.read("r5").count() == 2
+    assert _ids(store, "r5") == {1: "a2", 2: "b"}
+
+
+def test_compact_with_meta_predating_the_record(spark, store):
+    store.create(logs_schema("r6"))
+    store.append("r6", _mkdf(spark, [(1, ts(1, 5), "a"), (2, ts(1, 6), "b")]))
+    meta = store._meta("r6")
+    del meta["uncompacted"]
+    store._save_meta("r6", meta)
+    store.append("r6", _mkdf(spark, [(1, ts(1, 9), "a2")]))
+    assert "uncompacted" not in store._meta("r6")
+    store.compact("r6")
+    assert store.read("r6").count() == 2
+    assert _ids(store, "r6") == {1: "a2", 2: "b"}
+    assert store._meta("r6")["uncompacted"] == {"through_seq": 2, "ranges": {}}
+
+
+# -- pinned-schema reads -----------------------------------------------------
+
+
+def test_read_returns_declared_types_including_partition_columns(spark, store):
+    store.create(
+        Schema(
+            "typed",
+            (
+                Field("id", "long", nullable=False),  # a DDL alias of bigint
+                Field("p", "bigint"),
+                Field("x", "double"),
+            ),
+            partition_by=("p",),
+        )
+    )
+    want = [("id", "bigint"), ("x", "double"), ("_ingest_seq", "bigint"), ("p", "bigint")]
+    assert store.read("typed").dtypes == want  # no data yet
+    store.append(
+        "typed",
+        spark.createDataFrame([(1, 7, 1.5), (2, None, None)], "id long, p bigint, x double"),
+    )
+    got = store.read("typed")
+    assert got.dtypes == want  # inferring the partition type would give int
+    assert {r["id"]: r["p"] for r in got.collect()} == {1: 7, 2: None}
+
+    store.create(
+        Schema("flags", (Field("id", "int"), Field("flag", "boolean")), partition_by=("flag",))
+    )
+    store.append(
+        "flags",
+        spark.createDataFrame([(1, True), (2, False), (3, None)], "id int, flag boolean"),
+    )
+    got = store.read("flags")
+    assert got.dtypes == [("id", "int"), ("_ingest_seq", "bigint"), ("flag", "boolean")]
+    assert {r["id"]: r["flag"] for r in got.collect()} == {1: True, 2: False, 3: None}
+
+
+def test_read_plans_without_a_job(spark, store):
+    store.create(logs_schema("plan"))
+    store.append("plan", _mkdf(spark, [(1, ts(1, 5), "a")]))
+    df, jobs = count_jobs(spark, lambda: store.read("plan"))
+    assert jobs == 0
+    assert df.count() == 1
+
+
+# -- metadata-pruned retention -----------------------------------------------
+
+
+@contextlib.contextmanager
+def _session_tz(spark, tz):
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+@pytest.mark.parametrize("tz", ["America/Los_Angeles", "Asia/Kolkata", "-03:30"])
+def test_months_ago_at_equals_spark_evaluation(spark, tz):
+    anchors = [
+        dt.datetime(2024, 3, 1, 3, 0),
+        dt.datetime(2024, 3, 10, 9, 30),
+        dt.datetime(2024, 1, 31, 23, 59, 59, 999999),
+        dt.datetime(2023, 11, 5, 8, 30),
+        dt.datetime(2024, 7, 1, tzinfo=dt.timezone.utc),
+        dt.date(2024, 5, 1),
+    ]
+    cases = [(n, a) for n in (0, 1, 30) for a in anchors]
+    with _session_tz(spark, tz):
+        zone = session_zone(spark)
+        row = spark.range(1).select(
+            *[
+                F.unix_micros(months_ago(n, F.lit(a))).alias(f"c{i}")
+                for i, (n, a) in enumerate(cases)
+            ]
+        ).first()
+        for i, (n, a) in enumerate(cases):
+            got = months_ago_at(n, a, zone)
+            assert int(got.timestamp()) * 10**6 == row[f"c{i}"], (n, a)
+
+
+def test_delete_before_boundary_and_idle_pass_in_non_utc_session(spark, store):
+    with _session_tz(spark, "America/Los_Angeles"):
+        anchor = dt.datetime(2024, 3, 10, 12, 0, tzinfo=dt.timezone.utc)
+        cutoff = months_ago_at(2, anchor, session_zone(spark))  # Jan 1, LA midnight
+        one_us = dt.timedelta(microseconds=1)
+        store.create(logs_schema("ret"))
+        store.append(
+            "ret",
+            spark.createDataFrame(
+                [
+                    (1, cutoff - one_us, "expired"),
+                    (2, cutoff, "at-cutoff"),
+                    (3, cutoff + dt.timedelta(days=40), "later"),
+                ],
+                "id int, dttm timestamp, v string",
+            ),
+        )
+        assert sorted(store.partitions("ret")) == [
+            "dttm_month=2023-12-01",
+            "dttm_month=2024-01-01",
+            "dttm_month=2024-02-01",
+        ]
+        assert store.delete_before("ret", "dttm", cutoff) == 1
+        assert sorted(_ids(store, "ret").values()) == ["at-cutoff", "later"]
+        assert count_jobs(spark, lambda: store.delete_before("ret", "dttm", cutoff)) == (0, 0)
+        # A Column cutoff cannot be pruned by name, but deletes the same rows.
+        assert store.delete_before("ret", "dttm", F.lit(cutoff + one_us)) == 1
+        assert sorted(_ids(store, "ret").values()) == ["later"]
+
+
+# -- merge_into sizing and degenerate sources ------------------------------------
+
+
+def test_merge_into_sizes_broadcast_from_observed_bytes(spark, tmp_path, monkeypatch):
+    store = TableStore(spark, str(tmp_path))
+    store.create(
+        Schema(
+            "w",
+            (
+                Field("k", "bigint", nullable=False),
+                Field("day", "date", nullable=False),
+                Field("txt", "string"),
+            ),
+            partition_by=("day",),
+        )
+    )
+    d = dt.date(2024, 1, 1)
+    cols = "k bigint, day date, txt string"
+    store.append("w", spark.createDataFrame([(i, d, "x") for i in range(400)], cols))
+    wide = "y" * 4096
+    # 300 rows: 1.2 MB of text, while the per-type default widths give
+    # 300 × (8 + 4 + 20) B ≈ 9.6 KB for the update frame.
+    src = spark.createDataFrame([(i, d, wide) for i in range(300)], cols)
+    hinted = []
+    real = F.broadcast
+
+    def spy(df):
+        hinted.append(df.columns)
+        return real(df)
+
+    monkeypatch.setattr(F, "broadcast", spy)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(1024 * 1024))
+    try:
+        res = store.merge_into("w", src, on=["k"])
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert res == {"updated": 300, "deleted": 0, "inserted": 0}
+    assert ["k"] in hinted  # the key frame is 2.4 KB and broadcasts
+    assert not any("_m" in c for c in hinted)  # the update frame shuffles
+    got = {r["k"]: r["txt"] for r in store.read("w").collect()}
+    assert got == {i: (wide if i < 300 else "x") for i in range(400)}
+
+
+def test_merge_into_empty_source(spark, tmp_path):
+    store = TableStore(spark, str(tmp_path))
+    store.create(
+        Schema("e", (Field("k", "string", nullable=False), Field("v", "bigint")))
+    )
+    df = lambda rows: spark.createDataFrame(rows, "k string, v bigint")  # noqa: E731
+    store.append("e", df([("a", 1)]))
+    res = store.merge_into("e", df([]), on=["k"])
+    assert res == {"updated": 0, "deleted": 0, "inserted": 0}
+    assert _ids_kv(store, "e") == {"a": 1}
+
+
+def _ids_kv(store, name):
+    return {r["k"]: r["v"] for r in store.read(name).collect()}
